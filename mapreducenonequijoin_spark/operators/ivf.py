@@ -15,20 +15,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import stats
+
 __all__ = [
     "kmeans_lite",
     "assign_clusters",
     "ivf_self_search",
     "ivf_query_search",
 ]
-
-# Below this many CELLS (rows × dim) the k-means fit collects the
-# projected vectors once and runs Lloyd locally (~16 MB of float64 at
-# the bound — driver MODEL state, same envelope as the centroids and
-# the _cc_local edge gate). Past it the distributed fused
-# assign+partial-sum kernel runs unchanged.
-_LOCAL_KMEANS_MAX_CELLS = 2_000_000
-
 
 def _kmeans_local(
     emb: DataFrame,
@@ -93,7 +87,7 @@ def kmeans_lite(
     re-verified against its oracle at sf0.01 AND sf0.1.
 
     r15-opt (guide §1.2 "per-task work" after the algorithm is right):
-    below ``_LOCAL_KMEANS_MAX_CELLS`` (rows × dim — driver model
+    up to ``stats.LOCAL_KMEANS_CELLS`` (rows × dim — driver model
     state, ~16 MB of float64 at the bound) the fit collects the
     projected vector column ONCE through Arrow and runs every Lloyd
     iteration in local numpy: the distributed fit costs 1 + iterations
@@ -102,16 +96,18 @@ def kmeans_lite(
     n·dim (measured 1.7-1.9 s of every IVF-family key at sf0.1 for a
     1 MB input). Same gated-fast-path pattern as _cc_local and the
     exact-kNN router: past the gate the distributed kernel runs
-    unchanged, so a 100 TB corpus never touches this branch. The
-    local accumulation order (ascending id) sits inside the SAME
-    float-summation-order envelope as the distributed combine
-    (arrival-order partials); equality of resulting ASSIGNMENTS vs
-    the distributed kernel is pinned by tests/test_ivf_kernel_equiv.py
-    on every fixture."""
+    unchanged, so a 100 TB corpus never touches this branch; the
+    gate is a bounded ``stats.count_upto`` probe, so it never scans
+    past the gate either. The local accumulation order (the collected
+    partition order) sits inside the SAME float-summation-order
+    envelope as the distributed combine (arrival-order partials);
+    equality of resulting ASSIGNMENTS vs the distributed kernel is
+    pinned by tests/test_stats.py.
+
+    With fewer than ``k`` rows both routes fit the n rows as n
+    centroids."""
     import numpy as np
     import pandas as pd
-
-    from .joins import _stat_count
 
     init = (
         emb.orderBy(id_col)
@@ -120,16 +116,15 @@ def kmeans_lite(
         .collect()
     )
     centroids = [list(map(float, r[0])) for r in init]
-    if centroids:
-        dim0 = len(centroids[0])
-        # gate reads the memoized statistics count (no extra scan on
-        # repeated plan builds) and the dim from the init rows
-        if dim0 and _stat_count(emb) * dim0 <= _LOCAL_KMEANS_MAX_CELLS:
-            return _kmeans_local(emb, vec_col, centroids, k, iterations)
+    k = len(centroids)  # n < k: both routes fit the n rows
+    # gate on rows × dim, the dim read from the init rows
+    dim = len(centroids[0]) if k else 0
+    cap = stats.LOCAL_KMEANS_CELLS // max(dim, 1)
+    if dim and stats.count_upto(emb, cap) <= cap:
+        return _kmeans_local(emb, vec_col, centroids, k, iterations)
     vecs = emb.select(vec_col)  # project before the opaque pass
     for _ in range(iterations):
         cmat = np.array(centroids, dtype=np.float64)
-        dim = cmat.shape[1]
 
         def partial_sums(batches):
             sums = np.zeros((k, dim), dtype=np.float64)

@@ -35,6 +35,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import stats
+
 __all__ = [
     "band_join",
     "band_join_outer",
@@ -48,44 +50,6 @@ __all__ = [
     "salted_equi_join",
     "grid_distance_join_2d",
 ]
-
-# Below this product of input sizes the naive cross/BNLJ plan is cheap
-# and the bucketing overhead is not worth it (BASELINE.md bench note).
-_NAIVE_PAIR_THRESHOLD = 4_000_000
-
-# [OR11] statistics-step cardinalities, memoized by Catalyst semantic
-# hash: repeated plan builds over the same frame (bench loops, several
-# theta queries on one table in a session) pay the count scan once.
-# On a real deployment this is where catalog/CBO statistics plug in.
-_COUNT_CACHE: dict[tuple[int, int], int] = {}
-
-
-def _stat_count(df: DataFrame) -> int:
-    key = (id(df.sparkSession), df.semanticHash())
-    n = _COUNT_CACHE.get(key)
-    if n is None:
-        n = df.count()
-        _COUNT_CACHE[key] = n
-    return n
-
-
-# approxQuantile boundaries memoized the same way: every inequality-join
-# plan build was re-scanning the probe side for the SAME histogram
-# (bench loops, repeated builds in one session). Keyed by the projected
-# frame's semantic hash + the bucket count; catalog/CBO histogram
-# statistics are the production replacement.
-_QUANTILE_CACHE: dict[tuple[int, int, int], list[float]] = {}
-
-
-def _stat_quantiles(proj: DataFrame, col: str, b: int) -> list[float]:
-    key = (id(proj.sparkSession), proj.semanticHash(), b)
-    bounds = _QUANTILE_CACHE.get(key)
-    if bounds is None:
-        probs = [i / b for i in range(1, b)]
-        bounds = sorted(set(proj.approxQuantile(col, probs, 0.001)))
-        _QUANTILE_CACHE[key] = bounds
-    return bounds
-
 
 def _pseudo_block(df: DataFrame, n_blocks: int, seed: int) -> Column:
     """Pseudo-random block index ∈ [0, n_blocks) that is DETERMINISTIC
@@ -364,7 +328,7 @@ def theta_join(
     knowledge [OR11] assumes; on a real cluster use catalog stats.
 
     ``strategy``: 'auto' falls back to Spark's native non-equi plan
-    (BNLJ / broadcast) below a small-input threshold, '1bucket' forces
+    (BNLJ / broadcast) up to ``stats.NAIVE_PAIRS`` input pairs, '1bucket' forces
     the rewrite, 'naive' forces the native plan, 'broadcast' forces a
     broadcast nested-loop with the RIGHT side replicated to every
     executor (correct only when the right side is provably small —
@@ -378,10 +342,10 @@ def theta_join(
     if strategy == "broadcast":
         return left.join(F.broadcast(right), condition, "inner")
 
-    n_left, n_right = _stat_count(left), _stat_count(right)
+    n_left, n_right = stats.count(left), stats.count(right)
     if n_left == 0 or n_right == 0:
         return left.join(right, condition, "inner")
-    if strategy == "auto" and n_left * n_right <= _NAIVE_PAIR_THRESHOLD:
+    if strategy == "auto" and n_left * n_right <= stats.NAIVE_PAIRS:
         return left.join(right, condition, "inner")
 
     spark = left.sparkSession
@@ -446,7 +410,7 @@ def inequality_join_2pred(
     _check_disjoint(left, right)
 
     spark = left.sparkSession
-    n_left, n_right = _stat_count(left), _stat_count(right)
+    n_left, n_right = stats.count(left), stats.count(right)
     if n_left == 0 or n_right == 0:
         return left.join(
             right,
@@ -615,12 +579,12 @@ def inequality_join(
 
     # Statistics step (the [OR11] histogram): quantile boundaries of the
     # right side's join attribute. approxQuantile is a driver action
-    # returning O(b) floats — not a data materialization — and the
-    # result is memoized per (frame, b) so repeated plan builds don't
-    # rescan.
+    # returning O(b) floats — not a data materialization — and
+    # operators/stats memoizes it per (frame, input files, b) so
+    # repeated plan builds don't rescan.
     l_num, l_exact = _numeric(left, left_on)
     r_num, r_exact = _numeric(right, right_on)
-    bounds = _stat_quantiles(right.select(r_num.alias("__v")), "__v", b)
+    bounds = stats.quantiles(right.select(r_num.alias("__v")), "__v", b)
     if not bounds:
         return left.join(
             right, _cmp(_numeric_joined(left, left_on), _numeric_joined(right, right_on), op), "inner"
@@ -694,7 +658,7 @@ def inequality_join_mbucket_o(
 
     l_num, _ = _numeric(left, left_on)
     r_num, _ = _numeric(right, right_on)
-    bounds = _stat_quantiles(right.select(r_num.alias("__v")), "__v", b)
+    bounds = stats.quantiles(right.select(r_num.alias("__v")), "__v", b)
     if not bounds:
         return left.join(
             right,

@@ -26,7 +26,8 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.vectors import dot_expr
-from .joins import _stat_count, theta_join
+from . import stats
+from .joins import theta_join
 
 __all__ = [
     "knn_cosine",
@@ -38,13 +39,6 @@ __all__ = [
     "auto_band_params",
     "hyperplane_lsh_pairs",
 ]
-
-# Above this candidate count the exact blocked kernel's ×blocks
-# candidate replication becomes the cost driver and knn_cosine routes
-# to the IVF approximate path instead (same auto-fallback pattern as
-# theta_join's _NAIVE_PAIR_THRESHOLD).
-_EXACT_KNN_MAX_CANDIDATES = 200_000
-
 
 def _fold_matmul(a64, b64):
     """All-pairs dot products with LEFT-FOLD accumulation order.
@@ -71,15 +65,15 @@ def knn_cosine(
     id_col: str,
     vec_col: str,
     k: int = 5,
-    exact_threshold: int = _EXACT_KNN_MAX_CANDIDATES,
 ) -> DataFrame:
     """Size-gated k-NN router: the EXACT blocked kernel replicates the
-    full candidate side to every block — right answer below
-    ``exact_threshold`` candidates, a scale-killer above it. Larger
-    inputs route to the IVF cell-probing path (approximate recall,
-    documented in operators/ivf.py). The gate reads the memoized
-    statistics count, so no extra scan on repeated plan builds."""
-    if _stat_count(emb) <= exact_threshold:
+    full candidate side to every block — right answer up to
+    ``stats.EXACT_KNN_ROWS`` candidates, a scale-killer above it.
+    Larger inputs route to the IVF cell-probing path (approximate
+    recall, documented in operators/ivf.py). The gate and its
+    threshold live in operators/stats: a bounded, memoized probe, so
+    it never scans past the gate nor repeats on later plan builds."""
+    if stats.count_upto(emb, stats.EXACT_KNN_ROWS) <= stats.EXACT_KNN_ROWS:
         return knn_cosine_blocked(emb, id_col, vec_col, k=k)
     from .ivf import ivf_self_search
 
@@ -152,7 +146,7 @@ def knn_query_table(
                 "cast string/decimal ids to long before the join"
             )
 
-    q_probe = queries.limit(max_queries + 1).count()
+    q_probe = stats.count_upto(queries, max_queries)
     if not q_probe:
         raise ValueError("empty query set")
     if q_probe > max_queries:
@@ -469,7 +463,7 @@ def hyperplane_lsh_pairs(
     floats through Arrow, 47 s; the cogrouped kernel is ~10×
     faster on identical output.)"""
     if num_bands is None or planes_per_band is None:
-        auto_b, auto_r = auto_band_params(tau, _stat_count(emb))
+        auto_b, auto_r = auto_band_params(tau, stats.count(emb))
         num_bands = num_bands or auto_b
         planes_per_band = planes_per_band or auto_r
     sig = _band_sigs_udf(num_bands, planes_per_band, dim)
@@ -625,7 +619,7 @@ def knn_query_table_biscore(
     query sets should sample probes, not shuffle the corpus."""
     import numpy as np
 
-    q_probe = queries.limit(max_queries + 1).count()
+    q_probe = stats.count_upto(queries, max_queries)
     if not q_probe:
         raise ValueError("empty query set")
     if q_probe > max_queries:

@@ -12,12 +12,14 @@ Parquet table.
 from __future__ import annotations
 
 import datetime
+import glob
 import hashlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators import stats
 from ..sources.io import load_table, read_csv, read_json, sink_parquet
 from .registry import register
 
@@ -212,41 +214,22 @@ def sink_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     (asserted by tests/test_scans_sinks.py with broadcast disabled) —
     the join is pre-shuffled at write time. The aggregate's oracle is
     the same join on the original Parquet."""
-    # Cache key fingerprints the SOURCE data (path + file sizes +
+    # Cache key fingerprints the SOURCE data (file paths + sizes +
     # mtimes), not just the path: regenerating the fixtures in place
     # must invalidate the bucketed copies, or the query silently serves
     # stale buckets that diverge from the oracle's fresh-Parquet run.
-    import os
-
-    stamp = [sf_dir]
-    for t in ("orders", "lineitem"):
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        paths = (
-            sorted(os.path.join(p, f) for f in os.listdir(p))
-            if os.path.isdir(p)
-            else [p]
-        )
-        for f in paths:
-            st = os.stat(f)
-            stamp.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
-    key = hashlib.md5("|".join(stamp).encode()).hexdigest()[:8]
-    orders_t, li_t = f"orders_bkt_{key}", f"lineitem_bkt_{key}"
-    if not spark.catalog.tableExists(orders_t):
-        write_bucketed(
-            load_table(spark, sf_dir, "orders").select(
-                "o_orderkey", "o_orderpriority"
-            ),
-            orders_t, _cache_dir(sf_dir, "orders_bkt"), "o_orderkey", 8,
-        )
-    if not spark.catalog.tableExists(li_t):
-        write_bucketed(
-            load_table(spark, sf_dir, "lineitem").select(
-                "l_orderkey", "l_quantity"
-            ),
-            li_t, _cache_dir(sf_dir, "lineitem_bkt"), "l_orderkey", 8,
-        )
-    orders = spark.table(orders_t)
-    li = spark.table(li_t)
+    # Listed here rather than through inputFiles(): a warm build must
+    # not pay load_table's schema-inference job.
+    cols = {"orders": ["o_orderkey", "o_orderpriority"], "lineitem": ["l_orderkey", "l_quantity"]}
+    src = [f"{sf_dir}/{t}.parquet" for t in cols]
+    key = stats.file_stamp(src + [f for p in src for f in glob.glob(f"{p}/*")])[:8]
+    for t, keep in cols.items():
+        if not spark.catalog.tableExists(f"{t}_bkt_{key}"):
+            write_bucketed(
+                load_table(spark, sf_dir, t).select(*keep),
+                f"{t}_bkt_{key}", _cache_dir(sf_dir, f"{t}_bkt"), keep[0], 8,
+            )
+    orders, li = spark.table(f"orders_bkt_{key}"), spark.table(f"lineitem_bkt_{key}")
     return (
         orders.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
         .groupBy("o_orderpriority")
@@ -671,7 +654,6 @@ def sink_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle (same aggregate over raw lineitem) proves the rewrite was
     loss- and duplication-free; the file-count reduction itself is
     pinned by tests/test_scan_sink.py."""
-    import glob
     import math
     import os
 

@@ -340,7 +340,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges.join(deg, edges.src == deg.node).select("src", "dst", "outdeg").persist()
     )
     # node count: an O(1)-result driver statistic, same class as the
-    # [OR11] statistics step (operators/joins._stat_count)
+    # [OR11] statistics step (operators/stats)
     n = float(nodes.count())
     if n == 0:  # empty graph: no nodes, no ranks (guards the 1/n below)
         return spark.createDataFrame([], "node_id string, rank double")

@@ -77,33 +77,6 @@ def test_fused_kmeans_matches_reference_kernel(spark, sf_dir):
         assert a_ref == a_new
 
 
-def test_local_kmeans_matches_distributed_kernel(spark, sf_dir, monkeypatch):
-    """r15-opt: below _LOCAL_KMEANS_MAX_CELLS the fit collects the
-    vectors once and runs Lloyd locally. The local accumulation order
-    differs from the distributed combine only in float summation
-    ORDER (same envelope as r14's fused kernel); the argmax
-    ASSIGNMENT every consumer reads must be identical. Force the
-    distributed kernel by zeroing the gate and compare."""
-    import mapreducenonequijoin_spark.operators.ivf as ivf_mod
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    for k in (4, 8):
-        local = kmeans_lite(emb, "vec_id", "embedding", k=k)
-        monkeypatch.setattr(ivf_mod, "_LOCAL_KMEANS_MAX_CELLS", 0)
-        dist = kmeans_lite(emb, "vec_id", "embedding", k=k)
-        monkeypatch.undo()
-        assert np.allclose(np.array(local), np.array(dist), atol=1e-12)
-        a_local = {
-            r["vec_id"]: r["cluster"]
-            for r in assign_clusters(emb, "vec_id", "embedding", local).collect()
-        }
-        a_dist = {
-            r["vec_id"]: r["cluster"]
-            for r in assign_clusters(emb, "vec_id", "embedding", dist).collect()
-        }
-        assert a_local == a_dist
-
-
 def test_fused_kmeans_empty_cluster_keeps_seed(spark):
     """A cluster that captures no member keeps its previous centroid
     (the by_cl.get fallback) — same contract as the old kernel. Two

@@ -568,7 +568,7 @@ def test_substring_spans_detects_planted_duplicate(spark, tmp_path):
     assert out == {1: 21, 2: 21}
 
 
-def test_connected_components_high_diameter_path(spark):
+def test_connected_components_high_diameter_path(spark, monkeypatch):
     """A 600-node path is the adversarial case for label propagation
     (diameter = n-1): the three-phase kernel must still converge to
     the true single component — the old single-jump kernel silently
@@ -576,54 +576,20 @@ def test_connected_components_high_diameter_path(spark):
     high-diameter graphs."""
     import pyspark.sql.functions as F
 
+    from mapreducenonequijoin_spark.operators import stats
     from mapreducenonequijoin_spark.operators.dedup import connected_components
 
     edges = spark.range(599).select(
         F.col("id").alias("a"), (F.col("id") + 1).alias("b")
     )
     verts = spark.range(600).select(F.col("id").alias("v"))
-    # local_edge_threshold=0 forces the DISTRIBUTED kernel — this test
-    # exists to pin ITS convergence; the driver union-find fast path
-    # has its own equivalence test below
-    out = connected_components(
-        verts, edges, "v", "a", "b", local_edge_threshold=0
-    ).collect()
+    # a zero gate forces the DISTRIBUTED kernel — this test exists to
+    # pin ITS convergence; the driver union-find fast path has its own
+    # equivalence test (tests/test_stats.py)
+    monkeypatch.setattr(stats, "LOCAL_CC_EDGES", 0)
+    out = connected_components(verts, edges, "v", "a", "b").collect()
     assert len(out) == 600
     assert {r.cluster_rep for r in out} == {0}
-
-
-def test_connected_components_local_path_matches_distributed(spark):
-    """The gated driver union-find must be label-identical to the
-    distributed contract-and-broadcast kernel on a mixed graph
-    (path + clique + stars + singletons)."""
-    import pyspark.sql.functions as F
-
-    from mapreducenonequijoin_spark.operators.dedup import connected_components
-
-    # path 0-..-49, clique 100..109, stars 200-(201..205), 300-(301..303)
-    pairs = (
-        [(i, i + 1) for i in range(49)]
-        + [(a, b) for a in range(100, 110) for b in range(a + 1, 110)]
-        + [(200, x) for x in range(201, 206)]
-        + [(300, x) for x in range(301, 304)]
-    )
-    edges = spark.createDataFrame(pairs, "a long, b long")
-    verts = spark.range(0, 400).select(F.col("id").alias("v"))
-    local = {
-        (r.v, r.cluster_rep)
-        for r in connected_components(verts, edges, "v", "a", "b").collect()
-    }
-    dist = {
-        (r.v, r.cluster_rep)
-        for r in connected_components(
-            verts, edges, "v", "a", "b", local_edge_threshold=0
-        ).collect()
-    }
-    assert local == dist
-    assert len(local) == 400
-    reps = dict(local)
-    assert reps[49] == 0 and reps[109] == 100 and reps[205] == 200
-    assert reps[310] == 310  # singleton maps to itself
 
 
 def test_image_phash_brightness_invariance(spark, sf_dir):

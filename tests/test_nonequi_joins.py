@@ -259,15 +259,13 @@ def test_bucketed_nonequi_plans_never_bnlj_above_gate(spark):
     """VERDICT r5 item 4: the bucketed non-equi family must never fall
     back to a nested-loop/cartesian plan once inputs exceed the naive
     gate — band_join by construction (bucket equi key), theta_join via
-    the 1-Bucket rewrite above _NAIVE_PAIR_THRESHOLD. Checked on the
+    the 1-Bucket rewrite above stats.NAIVE_PAIRS. Checked on the
     executed plan string, where a fallback would appear as
     BroadcastNestedLoopJoin or CartesianProduct."""
-    from mapreducenonequijoin_spark.operators.joins import (
-        _NAIVE_PAIR_THRESHOLD,
-        band_join,
-    )
+    from mapreducenonequijoin_spark.operators import stats
+    from mapreducenonequijoin_spark.operators.joins import band_join
 
-    n = int(_NAIVE_PAIR_THRESHOLD ** 0.5) + 100  # n*n just above gate
+    n = int(stats.NAIVE_PAIRS ** 0.5) + 100  # n*n just above gate
     left = spark.range(n).select(
         F.col("id").alias("l_id"), (F.col("id") % 977).cast("double").alias("l_x")
     )
@@ -574,3 +572,55 @@ def test_spatial_nearest_is_true_minimum(spark, sf_dir):
     for a, (d, b) in got.items():
         assert a != b
         assert (d, b) == want[a]
+
+
+def test_statistics_follow_rewritten_input(spark, tmp_path):
+    """The [OR11] statistics memo (operators/stats) keys on the input
+    files as well as the plan: a path overwritten in place within one
+    session must be re-planned from its new rows, and a rebuild over
+    unchanged files must launch no Spark job (the warm-pass memo hit).
+    10 rows per side plan theta_join natively; the 2,100 rows that
+    replace them are past the naive gate, so the theta plan must
+    switch to the 1-Bucket rewrite and the inequality buckets must
+    come from the new values."""
+    import re
+
+    lp, rp = str(tmp_path / "l"), str(tmp_path / "r")
+
+    def write(n, off):
+        for path, p in ((lp, "l"), (rp, "r")):
+            spark.range(n).select(
+                F.col("id").alias(f"{p}_id"),
+                (F.col("id") + off).cast("double").alias(f"{p}_x"),
+            ).write.mode("overwrite").parquet(path)
+
+    def build(left, right):
+        tj = theta_join(left, right, F.abs(F.col("l_x") - F.col("r_x")) < 1.5)
+        ij = inequality_join(
+            left.filter(F.col("l_id") < 50), right.filter(F.col("r_id") < 50),
+            "l_x", "r_x", "<", num_buckets=4,
+        )
+        return tj, ij
+
+    write(10, 0)
+    tj, ij = build(spark.read.parquet(lp), spark.read.parquet(rp))
+    assert tj.count() == 28 and ij.count() == 45
+
+    write(2100, 1000)
+    left, right = spark.read.parquet(lp), spark.read.parquet(rp)
+    tj, ij = build(left, right)
+    assert _pairs(tj) == sorted(
+        (i, j) for i in range(2100) for j in range(i - 1, i + 2) if 0 <= j < 2100
+    )
+    assert _pairs(ij) == sorted((i, j) for i in range(50) for j in range(i + 1, 50))
+    plan = tj._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastNestedLoopJoin" not in plan
+    bounds = re.findall(
+        r"<= (-?[0-9.E]+)\) THEN", ij._jdf.queryExecution().optimizedPlan().toString()
+    )
+    assert bounds and all(1000 <= float(b) <= 1049 for b in bounds), bounds
+
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    build(left, right)
+    assert set(tracker.getJobIdsForGroup(None)) == before

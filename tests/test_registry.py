@@ -40,13 +40,25 @@ def duck():
     return con
 
 
+@pytest.fixture(scope="module")
+def plans(spark):
+    """Every non-eager registry plan, built ONCE for the three
+    whole-registry invariants: name -> (columns, executed plan)."""
+    out = {}
+    for name, qd in QUERIES.items():
+        if not _EAGER.match(name):
+            df = qd.fn(spark, SF)
+            out[name] = (df.columns, df._jdf.queryExecution().executedPlan().toString())
+    return out
+
+
 @pytest.mark.slow
-def test_oracle_columns_match_spark_aliases(spark, duck):
+def test_oracle_columns_match_spark_aliases(plans, duck):
     mismatches = []
     for name, qd in QUERIES.items():
         if qd.oracle is None or _EAGER.match(name):
             continue
-        spark_cols = sorted(qd.fn(spark, SF).columns)
+        spark_cols = sorted(plans[name][0])
         duck_cols = sorted(
             r[0] for r in duck.execute(f"DESCRIBE {qd.oracle}").fetchall()
         )
@@ -101,12 +113,11 @@ _SCALAR_BROADCAST_OK = {
 
 
 @pytest.mark.slow
-def test_no_cartesian_or_bnlj_in_plans(spark):
+def test_no_cartesian_or_bnlj_in_plans(plans):
     offenders = []
-    for name, qd in QUERIES.items():
-        if _EAGER.match(name) or name in _SCALAR_BROADCAST_OK:
+    for name, (_, plan) in plans.items():
+        if name in _SCALAR_BROADCAST_OK:
             continue
-        plan = qd.fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
         if "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan:
             offenders.append(name)
     assert not offenders, offenders
@@ -317,14 +328,13 @@ def test_census_rejects_synthetic_global_window(spark):
 
 
 @pytest.mark.slow
-def test_no_unexplained_global_windows(spark):
+def test_no_unexplained_global_windows(plans):
     from tools.explain_audit import global_window_lines
 
     offenders = []
-    for name, qd in QUERIES.items():
-        if _EAGER.match(name) or name in _GLOBAL_WINDOW_OK:
+    for name, (_, plan) in plans.items():
+        if name in _GLOBAL_WINDOW_OK:
             continue
-        plan = qd.fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
         hits = global_window_lines(plan)
         if hits:
             offenders.append((name, hits[0][:120]))

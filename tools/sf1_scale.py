@@ -205,10 +205,11 @@ def _graph_cc_distributed(spark, sf_dir: str):
     item 2: the distributed pointer-jumping CC loop
     (operators/dedup._cc_loop) is shadowed at every current bench
     scale by the 200k-edge local union-find gate, so this row forces
-    ``local_edge_threshold=0`` on a DENSER variant of the
+    ``stats.LOCAL_CC_EDGES = 0`` on a DENSER variant of the
     graph_connected_components trade graph (no %19 order sampling →
     ~100× the edges) and puts the loop's wall + shuffle ratio back
     under measurement."""
+    from mapreducenonequijoin_spark.operators import stats
     from mapreducenonequijoin_spark.operators.dedup import (
         connected_components,
     )
@@ -233,9 +234,12 @@ def _graph_cc_distributed(spark, sf_dir: str):
         .unionByName(e0.select(F.col("dst").alias("v")))
         .distinct()
     )
-    return connected_components(
-        verts, e0, "v", "src", "dst", local_edge_threshold=0
-    )
+    # the gate is read (and the loop run) inside the call
+    gate, stats.LOCAL_CC_EDGES = stats.LOCAL_CC_EDGES, 0
+    try:
+        return connected_components(verts, e0, "v", "src", "dst")
+    finally:
+        stats.LOCAL_CC_EDGES = gate
 
 
 # non-registry measurement harnesses, keyed like queries
