@@ -7,7 +7,11 @@ partitions the vector space; search probes only the query's nearest
 centroid cell(s), turning O(n²) scoring into O(n·n/k·probes). The
 centroid model is O(k·dim) floats — model parameters, exchanged with
 the driver like any fitted statistic (the [OR11] analogue: the
-histogram/statistics step), NOT a data materialization.
+histogram/statistics step), NOT a data materialization. Like those
+statistics it is memoised per input version in ``operators/stats``:
+``ivf_query_search`` fits once per (corpus plan, input files, k), so a
+warm rebuild over unchanged files launches no fit job, and a rewritten
+input is re-fitted. ``kmeans_lite`` itself always fits.
 """
 
 from __future__ import annotations
@@ -221,7 +225,10 @@ def ivf_query_search(
 
     from .similarity import _fold_matmul
 
-    centroids = kmeans_lite(corpus, id_col, vec_col, k=n_clusters)
+    centroids = stats.memo(
+        corpus, ("kmeans_lite", id_col, vec_col, n_clusters),
+        lambda: kmeans_lite(corpus, id_col, vec_col, k=n_clusters),
+    )
     cmat = np.array(centroids, dtype=np.float64)
     n_probe = min(n_probe, n_clusters)
 

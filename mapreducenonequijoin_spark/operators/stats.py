@@ -5,7 +5,9 @@ the memo key is the frame's Catalyst semantic hash plus a stamp of its
 input files (path, size, mtime), so repeated plan builds over the same
 data pay no scan, while a rewritten input misses the memo instead of
 serving its old statistics. On a real deployment this is where
-catalog/CBO statistics plug in.
+catalog/CBO statistics plug in. Fitted model state (k-means centroids,
+PQ codebooks) is memoised through the same ``memo``, so a warm query
+over unchanged files re-fits nothing.
 
 The routing thresholds live here too: at or below each, the operator
 takes its driver-local (or native) route; above, the distributed one.
@@ -42,7 +44,11 @@ def file_stamp(paths: list[str]) -> str:
     return hashlib.md5("|".join(stamp).encode()).hexdigest()
 
 
-def _memo(df: DataFrame, key: tuple, compute):
+def memo(df: DataFrame, key: tuple, compute):
+    """``compute()``, memoised per (``key``, plan of ``df``, input files):
+    the one cache for anything derived from a frame's data, statistics
+    and fitted model state alike. ``key`` must name every parameter the
+    value depends on besides ``df`` itself."""
     k = (*key, df.semanticHash(), file_stamp(df.inputFiles()))
     if k not in _MEMO:
         _MEMO[k] = compute()
@@ -50,20 +56,20 @@ def _memo(df: DataFrame, key: tuple, compute):
 
 
 def count(df: DataFrame) -> int:
-    return _memo(df, ("count",), df.count)
+    return memo(df, ("count",), df.count)
 
 
 def count_upto(df: DataFrame, cap: int) -> int:
     """Row count if it is at most ``cap``, else ``cap + 1``: a gate
     probe that never scans past the gate."""
-    return _memo(df, ("upto", cap), lambda: df.limit(cap + 1).count())
+    return memo(df, ("upto", cap), lambda: df.limit(cap + 1).count())
 
 
 def quantiles(df: DataFrame, col: str, b: int) -> list[float]:
     """The distinct approximate ``i/b`` quantiles of ``col``, ascending:
     equi-depth bucket boundaries for ``b`` buckets."""
     probs = [i / b for i in range(1, b)]
-    return _memo(
+    return memo(
         df, ("quantiles", col, b),
         lambda: sorted(set(df.approxQuantile(col, probs, 0.001))),
     )

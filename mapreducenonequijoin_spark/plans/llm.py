@@ -2203,6 +2203,7 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cos >= 0.9, near-identical vectors) share their nearest cell
     almost surely, which is the regime the paper reports ~100%
     coverage in."""
+    from ..operators import stats
     from ..operators.ivf import assign_clusters, kmeans_lite
     from ..operators.similarity import threshold_similarity_blocked
 
@@ -2212,9 +2213,12 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # makes cluster-scoped pair mass n²/k — still quadratic. Constant
     # CLUSTER SIZE makes it n·size/2 — linear, the paper's regime
     # (SemDeDup uses 50k clusters on LAION). n is one O(1) count.
-    n_vec = emb.count()
+    n_vec = stats.count(emb)
     k = max(8, n_vec // 250)
-    cents = kmeans_lite(emb, "vec_id", "embedding", k=k)
+    cents = stats.memo(
+        emb, ("kmeans_lite", "vec_id", "embedding", k),
+        lambda: kmeans_lite(emb, "vec_id", "embedding", k=k),
+    )
     clustered = assign_clusters(emb, "vec_id", "embedding", cents).select(
         "vec_id", "embedding", "cluster"
     )

@@ -457,6 +457,109 @@ def test_pq_train_deterministic_and_bounded(spark, sf_dir):
     assert np.array_equal(cb1, cb2)
 
 
+def test_pq_train_fewer_rows_than_ksub(spark, sf_dir):
+    """n < ksub: each codebook holds the n rows' subvectors (every row
+    is its own cell, so Lloyd never moves it), pq_search and
+    ivfpq_search (whose residual codebooks take the same path) return
+    exact distances, and an empty corpus raises a declared error."""
+    import numpy as np
+
+    from mapreducenonequijoin_spark.operators.pq import (
+        ivfpq_search,
+        pq_search,
+        pq_train,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings").orderBy("vec_id").limit(5)
+    rows = emb.select("vec_id", "embedding").collect()
+    ids = [r[0] for r in rows]
+    X = np.array([list(map(float, r[1])) for r in rows])
+
+    cb = pq_train(emb, "vec_id", "embedding", m=8, ksub=16)
+    assert cb.shape == (8, 5, 8)
+    assert np.array_equal(cb, X.reshape(5, 8, 8).transpose(1, 0, 2))
+
+    def exact(q, n):
+        return round(float(((X[ids.index(q)] - X[ids.index(n)]) ** 2).sum()), 6)
+
+    got = pq_search(emb, "vec_id", "embedding", query_ids=ids, k_neighbors=5).collect()
+    assert sorted((r.q_id, r.n_id) for r in got) == sorted(
+        (q, n) for q in ids for n in ids if n != q
+    )
+    got = ivfpq_search(emb, "vec_id", "embedding", query_ids=ids, k_neighbors=5).collect()
+    assert got and all(r.n_id != r.q_id for r in got)
+    for r in got:
+        assert r.l2_sq == pytest.approx(exact(r.q_id, r.n_id), abs=1e-6)
+
+    with pytest.raises(ValueError, match="empty corpus"):
+        pq_train(emb.limit(0), "vec_id", "embedding")
+
+
+def test_model_memo_follows_rewritten_input(spark, sf_dir, tmp_path, monkeypatch):
+    """pq_search's codebooks and ivf_self_search's centroids are
+    memoised per input version (operators/stats.memo). A rebuild over
+    unchanged files launches no fit job and returns the same rows;
+    after the file is overwritten in place with other vectors, the
+    fitted state both searches use equals a fresh fit on the new
+    data."""
+    import numpy as np
+
+    from mapreducenonequijoin_spark.operators import stats
+    from mapreducenonequijoin_spark.operators.ivf import ivf_self_search, kmeans_lite
+    from mapreducenonequijoin_spark.operators.pq import pq_search, pq_train
+
+    path = str(tmp_path / "emb")
+    src = load_table(spark, sf_dir, "embeddings")
+
+    def write(lo):
+        # 200 vectors renumbered 0..199: same ids and row count, other vectors
+        src.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < lo + 200)).select(
+            (F.col("vec_id") - lo).alias("vec_id"), "embedding"
+        ).coalesce(1).write.mode("overwrite").parquet(path)
+
+    used = {}  # fit name -> the model state the last build used
+    memo = stats.memo
+
+    def spy(df, key, compute):
+        used[key[0]] = value = memo(df, key, compute)
+        return value
+
+    monkeypatch.setattr(stats, "memo", spy)
+
+    def build(emb):
+        return (
+            pq_search(emb, "vec_id", "embedding", query_ids=[0, 1, 2]),
+            ivf_self_search(emb, "vec_id", "embedding"),
+        )
+
+    def rows(frames):
+        return [sorted(f.collect()) for f in frames]
+
+    write(0)
+    emb = spark.read.parquet(path)
+    first = rows(build(emb))
+    old_cb = used["pq_train"]
+
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    again = build(emb)
+    # one job: pq_search's fetch of its three query vectors; a fit of
+    # either model would add several
+    assert len(set(tracker.getJobIdsForGroup(None)) - before) == 1
+    assert rows(again) == first
+
+    write(200)
+    emb = spark.read.parquet(path)
+    build(emb)
+    fresh_cb = pq_train(emb, "vec_id", "embedding")
+    assert not np.array_equal(fresh_cb, old_cb)
+    assert np.array_equal(used["pq_train"], fresh_cb)
+    assert np.array_equal(
+        np.array(used["kmeans_lite"]),
+        np.array(kmeans_lite(emb, "vec_id", "embedding", k=8)),
+    )
+
+
 def test_ivfpq_search_recall_vs_exact(spark, sf_dir):
     """IVF-PQ (8 cells / 4 probes, residual PQ m=8 ksub=16, exact
     re-rank) must recover >= 0.5 of the exact L2 top-5. Random unit
