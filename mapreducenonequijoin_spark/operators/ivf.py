@@ -12,6 +12,13 @@ statistics it is memoised per input version in ``operators/stats``:
 ``ivf_query_search`` fits once per (corpus plan, input files, k), so a
 warm rebuild over unchanged files launches no fit job, and a rewritten
 input is re-fitted. ``kmeans_lite`` itself always fits.
+
+Each cell's top-k is ``similarity.fold_topk``: a BLAS product of the
+cell's queries and members filters with a rounding-error bound
+(4·γ_d·‖q‖·max‖m‖ below the k-th best BLAS score), and only the
+survivors get the left-fold score that the exact kernels and the
+oracles use, so the cosines a probe returns are the exact kernel's
+bits.
 """
 
 from __future__ import annotations
@@ -223,7 +230,7 @@ def ivf_query_search(
 
     from pyspark.sql import Window as W
 
-    from .similarity import _fold_matmul
+    from .similarity import fold_topk
 
     centroids = stats.memo(
         corpus, ("kmeans_lite", id_col, vec_col, n_clusters),
@@ -259,22 +266,16 @@ def ivf_query_search(
             return pd.DataFrame({"q_id": [], "n_id": [], "cosine": []}).astype(
                 {"q_id": "int64", "n_id": "int64", "cosine": "float64"}
             )
-        qv = np.stack(qdf["q_vec"].to_numpy()).astype(np.float64)
-        mv = np.stack(mdf["n_vec"].to_numpy()).astype(np.float64)
-        s = _fold_matmul(qv, mv)
         q_ids, n_ids = qdf["q_id"].to_numpy(), mdf["n_id"].to_numpy()
-        out_q, out_n, out_c = [], [], []
-        for i in range(len(q_ids)):
-            if exclude_self:
-                mask = n_ids != q_ids[i]
-                cand_n, cand_c = n_ids[mask], s[i][mask]
-            else:
-                cand_n, cand_c = n_ids, s[i]
-            order = np.lexsort((cand_n, -cand_c))[:k_neighbors]
-            out_q.extend([q_ids[i]] * len(order))
-            out_n.extend(cand_n[order])
-            out_c.extend(cand_c[order])
-        return pd.DataFrame({"q_id": out_q, "n_id": out_n, "cosine": out_c})
+        q, n, cos, _ = fold_topk(
+            np.stack(qdf["q_vec"].to_numpy()).astype(np.float64),
+            np.stack(mdf["n_vec"].to_numpy()).astype(np.float64),
+            q_ids, n_ids, k_neighbors,
+            exclude_mask=(
+                q_ids[:, None] == n_ids[None, :] if exclude_self else None
+            ),
+        )
+        return pd.DataFrame({"q_id": q, "n_id": n, "cosine": cos})
 
     partial = (
         queries_rep.groupBy("__cell")

@@ -13,6 +13,21 @@ L2-normalized → cosine ≡ dot product.
 - hyperplane_lsh_pairs: the 100 TB scale path — random-hyperplane
   signatures (Charikar 2002) as the bucketing key, exact-dot residual
   verify. Approximate recall → driver records rows-only.
+
+Exact scores are LEFT-FOLD dot products, ``(..(0.0 + x0*y0) + x1*y1
+..)``, the operation sequence of the Spark higher-order-function fold
+and of DuckDB's list_dot_product, so cosines match the oracle bit for
+bit. The numpy kernels filter, then refine: one BLAS ``a @ b.T``
+scores a block, and only the pairs it cannot rule out are folded. A
+d-term dot product lies within γ_d·‖a‖·‖b‖ of the exact one in ANY
+summation order (γ_d = d·u/(1 − d·u), u = 2⁻⁵³), so BLAS and fold
+differ by at most 2·γ_d·‖a‖·‖b‖. A top-k keeps every pair with
+BLAS ≥ t − 4·γ_d·‖a_i‖·max‖b‖ (t: the row's k-th best BLAS score) and
+a threshold join every pair with BLAS ≥ τ − 2·γ_d·‖a_i‖·‖b_j‖; no
+member or tie of the exact answer is lost, and every score returned,
+and every rank or threshold decision, comes from the fold — which is
+why the refine keeps bit parity. A block with a non-finite value folds
+every pair (``fold_topk``, ``fold_threshold``).
 """
 
 from __future__ import annotations
@@ -20,6 +35,7 @@ from __future__ import annotations
 import hashlib
 import math
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, Window as W
@@ -33,6 +49,8 @@ __all__ = [
     "knn_cosine",
     "knn_cosine_brute",
     "knn_cosine_blocked",
+    "fold_topk",
+    "fold_threshold",
     "knn_query_table",
     "threshold_similarity_join",
     "threshold_similarity_blocked",
@@ -50,14 +68,138 @@ def _fold_matmul(a64, b64):
     ``acc = (..(0.0 + x0*y0) + x1*y1 ..)`` per pair — the same FP
     operation sequence as both engines — while staying vectorized
     (64 outer-product updates instead of 4M interpreted folds).
-    """
-    import numpy as np
 
+    Only ``knn_query_table_biscore`` still folds every pair: its L2
+    re-rank needs every dot product. The top-k and threshold kernels
+    fold just the survivors of a BLAS filter (``fold_topk``,
+    ``fold_threshold``).
+    """
     m, dim = a64.shape
     s = np.zeros((m, b64.shape[0]), dtype=np.float64)
     for d in range(dim):
         s += np.outer(a64[:, d], b64[:, d])
     return s
+
+
+def _empty_topk() -> pd.DataFrame:
+    return pd.DataFrame(
+        {"q_id": [], "n_id": [], "cosine": [], "rank": []}
+    ).astype({"q_id": "int64", "n_id": "int64", "cosine": "float64", "rank": "int64"})
+
+
+def _fold_pairs(a64, b64, rows, cols):
+    """Left-fold dot products of the listed (row, col) pairs only: per
+    pair the same operation sequence as ``_fold_matmul``, so the same
+    bits."""
+    at, bt = a64.T[:, rows], b64.T[:, cols]
+    s = np.zeros(len(rows), dtype=np.float64)
+    for d in range(a64.shape[1]):
+        s += at[d] * bt[d]
+    return s
+
+
+def _blas_filter(a64, b64):
+    """(BLAS scores, per-row norms of a, norms of b, error factor), or
+    None when the block holds a non-finite value — then the caller
+    folds every pair.
+
+    Both ``a @ b.T`` (any summation order, FMA or not) and the left
+    fold lie within γ_d·Σ|a_k·b_k| ≤ γ_d·‖a‖·‖b‖ of the exact dot,
+    with γ_d = d·u/(1 − d·u) and u = 2⁻⁵³, so they differ by at most
+    2·γ_d·‖a‖·‖b‖. The worst case is not attained, which covers the
+    few roundings of the bound's own arithmetic."""
+    s = a64 @ b64.T
+    na = np.linalg.norm(a64, axis=1)
+    nb = np.linalg.norm(b64, axis=1)
+    du = a64.shape[1] * 2.0**-53
+    gamma = du / (1.0 - du)
+    if not (
+        np.isfinite(a64).all() and np.isfinite(b64).all()
+        and np.isfinite(s).all()
+        and np.isfinite(na).all() and np.isfinite(nb).all()
+    ):
+        return None
+    return s, na, nb, gamma
+
+
+def fold_topk(a64, b64, a_ids, b_ids, k, exclude_mask=None):
+    """Per row of ``a64``, its top ``k`` rows of ``b64`` by left-fold
+    dot product, ties broken by ascending id — byte for byte what a
+    full ``_fold_matmul`` followed by one ``np.lexsort((ids, -score))``
+    per row gives. ``exclude_mask`` (rows × cols, True = not a
+    candidate) masks self pairs or same-label pairs.
+
+    Filter and refine: one BLAS product scores the block; t_i is the
+    k-th best BLAS score among row i's candidates. Since BLAS and fold
+    differ by at most 2·E_i per pair, E_i = γ_d·‖a_i‖·max_j‖b_j‖ (see
+    ``_blas_filter``), every pair whose fold reaches the k-th best fold
+    has BLAS ≥ t_i − 4·E_i. Only those survivors are folded — so every
+    score returned is the fold's, and no top-k member or tie is lost —
+    then ranked by (row, −fold, id) in one lexsort. A block with a
+    non-finite value folds every candidate pair.
+
+    Returns (q_id, n_id, score, rank) arrays ordered by row, then rank.
+    """
+    m, n = len(a64), len(b64)
+    valid = (
+        np.ones((m, n), dtype=bool) if exclude_mask is None else ~exclude_mask
+    )
+    filt = _blas_filter(a64, b64) if m and n and k > 0 else None
+    if filt is None:
+        keep = valid
+    else:
+        s, na, nb, gamma = filt
+        masked = np.where(valid, s, -np.inf)
+        if k < n:
+            t = np.partition(masked, n - k, axis=1)[:, n - k]
+        else:
+            t = np.full(m, -np.inf)
+        slack = 4.0 * gamma * na * nb.max()
+        keep = valid & (masked >= (t - slack)[:, None])
+    rows, cols = np.nonzero(keep)
+    f = _fold_pairs(a64, b64, rows, cols)
+    order = np.lexsort((b_ids[cols], -f, rows))
+    rows, cols, f = rows[order], cols[order], f[order]
+    rank = np.arange(1, len(rows) + 1) - np.searchsorted(rows, rows)
+    top = rank <= k
+    return a_ids[rows[top]], b_ids[cols[top]], f[top], rank[top]
+
+
+def fold_threshold(a64, b64, tau, pair_mask=None):
+    """(rows, cols, score) of every pair with left-fold dot ≥ ``tau``,
+    in row-major order — what ``np.nonzero((_fold_matmul(a, b) >= tau)
+    & pair_mask)`` gives. ``pair_mask`` (True = candidate) is
+    optional.
+
+    Filter and refine: BLAS and fold differ by at most
+    2·γ_d·‖a_i‖·‖b_j‖ (see ``_blas_filter``), so every pair with
+    fold ≥ τ has BLAS ≥ τ − 2·γ_d·‖a_i‖·‖b_j‖. Only those pairs are
+    folded, and the fold decides. A block with a non-finite value folds
+    every pair."""
+    filt = _blas_filter(a64, b64) if len(a64) and len(b64) else None
+    if filt is None:
+        keep = np.ones((len(a64), len(b64)), dtype=bool)
+    else:
+        s, na, nb, gamma = filt
+        keep = s >= tau - 2.0 * gamma * np.outer(na, nb)
+    if pair_mask is not None:
+        keep &= pair_mask
+    rows, cols = np.nonzero(keep)
+    f = _fold_pairs(a64, b64, rows, cols)
+    hit = f >= tau
+    return rows[hit], cols[hit], f[hit]
+
+
+def _exact_blocks(spark) -> int:
+    """Block count of the exact blocked kernels: one block per task
+    slot. Every block receives a full copy of the candidate side, so
+    blocks past the slots that run them only multiply the bytes
+    shuffled and sent through Arrow (blocks × n × dim × 4) — [OR11]
+    sizes its regions to the reducers for the same reason."""
+    return min(
+        int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
+        spark.sparkContext.defaultParallelism,
+    )
 
 
 def knn_cosine(
@@ -136,8 +278,6 @@ def knn_query_table(
     sides (they travel through int64 numpy kernels); anything else
     raises immediately rather than miscasting.
     """
-    import numpy as np
-
     for side, name in ((queries, "queries"), (corpus, "corpus")):
         dt = side.schema[id_col].dataType.simpleString()
         if dt not in ("tinyint", "smallint", "int", "bigint"):
@@ -189,19 +329,11 @@ def knn_query_table(
             if pdf.empty:
                 continue
             c64 = np.stack(pdf["n_vec"].to_numpy()).astype(np.float64)
-            n_ids = pdf["n_id"].to_numpy()
-            cos = _fold_matmul(q_mat, c64)  # (|Q|, batch)
-            kk = min(k, cos.shape[1])
             # per-batch top-k per query: order by (-cosine, n_id)
-            order = np.lexsort((n_ids[None, :].repeat(len(q_ids), 0), -cos))
-            take = order[:, :kk]
-            yield pd.DataFrame(
-                {
-                    "q_id": np.repeat(q_ids, kk),
-                    "n_id": n_ids[take.ravel()],
-                    "cosine": np.take_along_axis(cos, take, axis=1).ravel(),
-                }
+            q, n, cos, _ = fold_topk(
+                q_mat, c64, q_ids, pdf["n_id"].to_numpy(), k
             )
+            yield pd.DataFrame({"q_id": q, "n_id": n, "cosine": cos})
 
     cand = corpus.select(
         F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec")
@@ -225,15 +357,14 @@ def knn_cosine_blocked(
     replicate-one-side pattern with blocks as regions), and compute
     each block's pair scores in one numpy kernel via applyInPandas.
     Identical results to knn_cosine_brute — including bit-identical
-    cosines (see _fold_matmul) — at a fraction of the cost: the fold
+    cosines (see fold_topk) — at a fraction of the cost: the fold
     moves from per-pair interpreted expressions to vectorized batch
-    math. Candidate-side replication is the scale limit; beyond
-    ~10⁵ candidates switch to the LSH/IVF path.
+    math, and runs only on the pairs a BLAS bound cannot rule out.
+    One block per task slot (``_exact_blocks``). Candidate-side
+    replication is the scale limit; past ``stats.EXACT_KNN_ROWS``
+    candidates ``knn_cosine`` routes to the IVF path.
     """
-    import pandas as pd
-
-    spark = emb.sparkSession
-    nb = num_blocks or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    nb = num_blocks or _exact_blocks(emb.sparkSession)
 
     a = emb.select(
         F.col(id_col).alias("q_id"),
@@ -246,31 +377,16 @@ def knn_cosine_blocked(
         F.explode(F.sequence(F.lit(0), F.lit(nb - 1))).alias("__blk"),
     )
     def topk(adf: pd.DataFrame, bdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
         if adf.empty or bdf.empty:
-            return pd.DataFrame(
-                {"q_id": [], "n_id": [], "cosine": [], "rank": []}
-            ).astype({"q_id": "int64", "n_id": "int64", "cosine": "float64", "rank": "int64"})
-        a64 = np.stack(adf["q_vec"].to_numpy()).astype(np.float64)
-        b64 = np.stack(bdf["n_vec"].to_numpy()).astype(np.float64)
-        s = _fold_matmul(a64, b64)
+            return _empty_topk()
         q_ids = adf["q_id"].to_numpy()
         n_ids = bdf["n_id"].to_numpy()
-        out_q, out_n, out_c, out_r = [], [], [], []
-        for i in range(len(q_ids)):
-            row = s[i]
-            mask = n_ids != q_ids[i]
-            cand_n, cand_c = n_ids[mask], row[mask]
-            order = np.lexsort((cand_n, -cand_c))[:k]
-            out_q.extend([q_ids[i]] * len(order))
-            out_n.extend(cand_n[order])
-            out_c.extend(cand_c[order])
-            out_r.extend(range(1, len(order) + 1))
-        return pd.DataFrame(
-            {"q_id": out_q, "n_id": out_n, "cosine": out_c,
-             "rank": pd.array(out_r, dtype="int64")}
+        q, n, cos, rank = fold_topk(
+            np.stack(adf["q_vec"].to_numpy()).astype(np.float64),
+            np.stack(bdf["n_vec"].to_numpy()).astype(np.float64),
+            q_ids, n_ids, k, exclude_mask=q_ids[:, None] == n_ids[None, :],
         )
+        return pd.DataFrame({"q_id": q, "n_id": n, "cosine": cos, "rank": rank})
 
     return (
         a.groupBy("__blk")
@@ -288,11 +404,9 @@ def threshold_similarity_blocked(
 ) -> DataFrame:
     """Exact threshold self-similarity join with the same blocked
     numpy kernel; each unordered pair is scored once (in the block of
-    its lower id) — the [OR11 §4] unique-region property."""
-    import pandas as pd
-
-    spark = emb.sparkSession
-    nb = num_blocks or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    its lower id) — the [OR11 §4] unique-region property. Only pairs a
+    BLAS bound cannot rule out are folded (``fold_threshold``)."""
+    nb = num_blocks or _exact_blocks(emb.sparkSession)
     a = emb.select(
         F.col(id_col).alias("a_id"),
         F.col(vec_col).alias("a_vec"),
@@ -305,22 +419,18 @@ def threshold_similarity_blocked(
     )
 
     def pairs(adf: pd.DataFrame, bdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
         if adf.empty or bdf.empty:
             return pd.DataFrame({"a_id": [], "b_id": [], "cosine": []}).astype(
                 {"a_id": "int64", "b_id": "int64", "cosine": "float64"}
             )
-        a64 = np.stack(adf["a_vec"].to_numpy()).astype(np.float64)
-        b64 = np.stack(bdf["b_vec"].to_numpy()).astype(np.float64)
-        s = _fold_matmul(a64, b64)
-        a_ids = adf["a_id"].to_numpy()[:, None]
-        b_ids = bdf["b_id"].to_numpy()[None, :]
-        keep = (s >= tau) & (a_ids < b_ids)
-        ai, bi = np.nonzero(keep)
-        return pd.DataFrame(
-            {"a_id": a_ids[ai, 0], "b_id": b_ids[0, bi], "cosine": s[ai, bi]}
+        a_ids = adf["a_id"].to_numpy()
+        b_ids = bdf["b_id"].to_numpy()
+        ai, bi, cos = fold_threshold(
+            np.stack(adf["a_vec"].to_numpy()).astype(np.float64),
+            np.stack(bdf["b_vec"].to_numpy()).astype(np.float64),
+            tau, a_ids[:, None] < b_ids[None, :],
         )
+        return pd.DataFrame({"a_id": a_ids[ai], "b_id": b_ids[bi], "cosine": cos})
 
     return (
         a.groupBy("__blk")
@@ -363,8 +473,6 @@ def _band_sigs_udf(num_bands: int, planes_per_band: int, dim: int):
     """Arrow-batched UDF: all band signatures of a vector in ONE numpy
     matmul against the (num_bands·planes_per_band)×dim plane matrix;
     planes are the deterministic md5 ±1 hyperplanes."""
-    import numpy as np
-
     planes = np.array(
         _hyperplane_signs(num_bands * planes_per_band, dim), dtype=np.float64
     )
@@ -455,7 +563,7 @@ def hyperplane_lsh_pairs(
     earlier matching band is dropped before scoring).
 
     Execution: the exploded (band, signature) rows are COGROUPED per
-    bucket and each bucket is scored by the in-group ``_fold_matmul``
+    bucket and each bucket is scored by the in-group ``fold_threshold``
     kernel (exact dots, bit-identical fold order) — so what shuffles
     and crosses the Arrow boundary is bands × n signature rows, never
     candidate PAIRS. (A previous formulation equi-joined pairs first
@@ -482,31 +590,28 @@ def hyperplane_lsh_pairs(
         "*", F.posexplode("b_sigs").alias("__band", "__sig")
     )
 
-    import numpy as np
-
     def kernel(ldf: pd.DataFrame, rdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame({"a_id": [], "b_id": [], "cosine": []})
         if ldf.empty or rdf.empty:
             return empty
-        av = np.stack(ldf["a_vec"].to_numpy()).astype(np.float64)
-        bv = np.stack(rdf["b_vec"].to_numpy()).astype(np.float64)
-        cos = _fold_matmul(av, bv)
         aid = ldf["a_id"].to_numpy()
         bid = rdf["b_id"].to_numpy()
-        keep = (cos >= tau) & (aid[:, None] < bid[None, :])
+        li, ri, cos = fold_threshold(
+            np.stack(ldf["a_vec"].to_numpy()).astype(np.float64),
+            np.stack(rdf["b_vec"].to_numpy()).astype(np.float64),
+            tau, aid[:, None] < bid[None, :],
+        )
         band = int(ldf["__band"].iloc[0])
-        if band > 0 and keep.any():
+        if band > 0 and len(li):
             # first-matching-band exactly-once: drop pairs that
             # already collided in an earlier band
-            asig = np.stack(ldf["a_sigs"].to_numpy())[:, :band]
-            bsig = np.stack(rdf["b_sigs"].to_numpy())[:, :band]
-            keep &= ~(asig[:, None, :] == bsig[None, :, :]).any(axis=2)
-        li, ri = keep.nonzero()
+            asig = np.stack(ldf["a_sigs"].to_numpy())[li, :band]
+            bsig = np.stack(rdf["b_sigs"].to_numpy())[ri, :band]
+            first = ~(asig == bsig).any(axis=1)
+            li, ri, cos = li[first], ri[first], cos[first]
         if not len(li):
             return empty
-        return pd.DataFrame(
-            {"a_id": aid[li], "b_id": bid[ri], "cosine": cos[li, ri]}
-        )
+        return pd.DataFrame({"a_id": aid[li], "b_id": bid[ri], "cosine": cos})
 
     return (
         a.groupby("__band", "__sig")
@@ -533,10 +638,7 @@ def hard_negatives_blocked(
     label-inequality mask. Candidate-side replication is the scale
     limit; past ~10⁵ candidates route through the IVF path with a
     label filter on the probed cells."""
-    import pandas as pd
-
-    spark = emb.sparkSession
-    nb = num_blocks or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    nb = num_blocks or _exact_blocks(emb.sparkSession)
 
     a = emb.select(
         F.col(id_col).alias("q_id"),
@@ -552,35 +654,17 @@ def hard_negatives_blocked(
     )
 
     def topk(adf: pd.DataFrame, bdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
         if adf.empty or bdf.empty:
-            return pd.DataFrame(
-                {"q_id": [], "n_id": [], "cosine": [], "rank": []}
-            ).astype(
-                {"q_id": "int64", "n_id": "int64",
-                 "cosine": "float64", "rank": "int64"}
-            )
-        a64 = np.stack(adf["q_vec"].to_numpy()).astype(np.float64)
-        b64 = np.stack(bdf["n_vec"].to_numpy()).astype(np.float64)
-        s = _fold_matmul(a64, b64)
-        q_ids = adf["q_id"].to_numpy()
+            return _empty_topk()
         q_labs = adf["q_lab"].to_numpy()
-        n_ids = bdf["n_id"].to_numpy()
         n_labs = bdf["n_lab"].to_numpy()
-        out_q, out_n, out_c, out_r = [], [], [], []
-        for i in range(len(q_ids)):
-            mask = n_labs != q_labs[i]
-            cand_n, cand_c = n_ids[mask], s[i][mask]
-            order = np.lexsort((cand_n, -cand_c))[:k]
-            out_q.extend([q_ids[i]] * len(order))
-            out_n.extend(cand_n[order])
-            out_c.extend(cand_c[order])
-            out_r.extend(range(1, len(order) + 1))
-        return pd.DataFrame(
-            {"q_id": out_q, "n_id": out_n, "cosine": out_c,
-             "rank": pd.array(out_r, dtype="int64")}
+        q, n, cos, rank = fold_topk(
+            np.stack(adf["q_vec"].to_numpy()).astype(np.float64),
+            np.stack(bdf["n_vec"].to_numpy()).astype(np.float64),
+            adf["q_id"].to_numpy(), bdf["n_id"].to_numpy(), k,
+            exclude_mask=q_labs[:, None] == n_labs[None, :],
         )
+        return pd.DataFrame({"q_id": q, "n_id": n, "cosine": cos, "rank": rank})
 
     return (
         a.groupBy("__blk")
@@ -617,8 +701,6 @@ def knn_query_table_biscore(
     knn_query_table's (≤ max_queries rows); past the gate this kernel
     refuses rather than degrade — rank-agreement metrics over huge
     query sets should sample probes, not shuffle the corpus."""
-    import numpy as np
-
     q_probe = stats.count_upto(queries, max_queries)
     if not q_probe:
         raise ValueError("empty query set")

@@ -3326,7 +3326,7 @@ def pipeline_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Correctness rides the recall-gate pattern: the EXACT arm's
     aggregate hits and integer MRR numerator are hash-checked against
     DuckDB's brute-force SQL (bit-exact fold-order cosines,
-    operators/similarity.py:_fold_matmul), while the IVF-fused list's
+    operators/similarity.py:fold_topk), while the IVF-fused list's
     quality enters as TWO measured booleans — fused hits and fused MRR
     each within 0.9x of the exact arm (integer cross-multiplication,
     no float compare) — which the oracle states as the exact-truth

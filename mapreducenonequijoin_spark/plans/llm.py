@@ -2224,7 +2224,7 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Cluster-scoped candidate scoring runs the SAME numpy left-fold
     # kernel as the brute-force twin (operators/similarity
-    # ._fold_matmul — bit-identical to the previous per-pair JVM
+    # .fold_threshold — bit-identical to the previous per-pair JVM
     # zip_with/aggregate fold AND to DuckDB's list_dot_product), one
     # cogroup per cluster: the pair stream never materializes the
     # duplicated (a_embedding, b_embedding) arrays the join-based
@@ -2232,7 +2232,7 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-pair interpreted fold leaves the plan entirely.
     import pandas as pd  # noqa: PLC0415
 
-    from ..operators.similarity import _fold_matmul
+    from ..operators.similarity import fold_threshold
 
     def cluster_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
@@ -2242,10 +2242,8 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 {"a_id": "int64", "b_id": "int64"}
             )
         v = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        s = _fold_matmul(v, v)
         ids = pdf["vec_id"].to_numpy().astype("int64")
-        keep = (s >= tau) & (ids[:, None] < ids[None, :])
-        ai, bi = np.nonzero(keep)
+        ai, bi, _ = fold_threshold(v, v, tau, ids[:, None] < ids[None, :])
         return pd.DataFrame({"a_id": ids[ai], "b_id": ids[bi]})
 
     found = (
